@@ -5,8 +5,9 @@ Prints ONE JSON line:
  "queries": {name: sec, ...}, "sf": "..."}
 
 Each query is executed to a collect() after a warmup that absorbs JVM
-startup, table listing and the Python-worker pool spawn. Each query
-runs five times and reports the fastest run: the first execution pays
+startup and the Python-worker pool spawn. Each query runs five times,
+each on a freshly built plan (build time is inside the timed region),
+and reports the fastest run: the first execution pays
 one-time whole-stage-codegen compilation + JIT (measured 6s -> 0.45s
 on the regex-heavy text query), a fixed cost that is irrelevant at
 any real scale — at 100 TB a query compiles once and scans for hours.
@@ -70,20 +71,11 @@ def main() -> None:
     # throughput profile: AQE on, full shuffle parallelism).
     spark = get_spark("bench", master=os.environ.get("SPARK_GRAFT_MASTER"))
 
-    # Warmup: PLAN-only table warming (memoized analyzed frames — no
-    # data caching), then run the flagship once for JVM warm-in.
-    # r14 methodology fix: rounds 10-13 passed persist=True here,
-    # which materialized every base table into the block-manager
-    # cache BEFORE the timed region — timed runs then read RAM, not
-    # the parquet inputs, and (via the CacheManager's plan matching)
-    # never paid the scan. Every timed run now computes from the
-    # parquet files, like the DuckDB proxy it is graded against
-    # (views over the same files). Same-commit A/B decomposition is
-    # recorded in BASELINE.md §"Bench methodology log (r14)";
-    # comparing an r14+ total to r10-r13 artifacts MUST bridge
-    # through that note.
-    from data_platform_copilot_spark.sources import warm_tables
-    warm_tables(spark, sf_dir, persist=False)
+    # Warmup: run the flagship once for JVM warm-in. Every timed run
+    # below builds its plan anew (registry builders are pure), so it
+    # pays the plan build, scans the parquet inputs and runs every
+    # stage — no shuffle output or checkpoint block of an earlier run
+    # is reused. BENCH.md's change log has the same-box before/after.
     QUERIES["flagship_revenue_by_nation"](spark, sf_dir).collect()
     # Spawn the reusable Python worker pool once (Arrow stages pay
     # ~2.5s of process startup on first use; the pool persists via

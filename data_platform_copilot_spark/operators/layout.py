@@ -338,10 +338,14 @@ def bucketed_exact_percentiles(df: DataFrame, part_cols: list[str],
            .select("__pp", "__pi", "__pos",
                    F.floor("__pos").alias("__lo"),
                    F.ceil("__pos").alias("__hi")))
+    # An all-NULL group (n = 0) has pos = -p, so p = 1.0 would ask
+    # only for rank 0, which no bucket holds. Clamping to rank 1 lands
+    # on the NULL sentinel bucket, whose pick interpolates to NULL.
     ranks = tgt.select(
         "__pp", "__pi", "__pos", "__lo", "__hi",
-        F.explode(F.array_distinct(
-            F.array(F.col("__lo") + 1, F.col("__hi") + 1))).alias("__rank"))
+        F.explode(F.array_distinct(F.array(
+            F.greatest(F.col("__lo") + 1, F.lit(1)),
+            F.greatest(F.col("__hi") + 1, F.lit(1))))).alias("__rank"))
     located = (ranks.join(offs, "__pp")
                .where((F.col("__off") < F.col("__rank"))
                       & (F.col("__rank") <= F.col("__off") + F.col("__c"))))

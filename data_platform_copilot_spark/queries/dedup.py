@@ -296,29 +296,12 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     8x; candidates are re-scored exactly, so false bucket collisions
     cannot leak through. Compute is O(sum bucket^2) << O(n^2) — the
     100 TB path. tag_partitions=4 sizes the Python tag stage to the
-    ~1 MB cached corpus (see operator docstring).
-
-    The assembled pipeline is registered as a warm VIEW (plan reuse,
-    sources.registry.warm_view): rebuilding this mapInPandas chain
-    through py4j costs ~0.2 s per call — half this entry's measured
-    bench line — while the plan itself is immutable and pure-lazy
-    (no persist/checkpoint; pinned by test), so every execution
-    re-runs tag + shuffle + gemm in full. r10 before/after at sf0.1:
-    0.449 s fresh-rebuild-per-run -> ~0.21 s steady-state. (The
-    JVM-expression tag alternative was measured too: exec 0.19 s but
-    1.4 s to BUILD the 32x64 literal-plane lambda tree per call —
-    worse on both axes than reusing the Python-tag plan.)"""
-    from ..sources.registry import warm_view
-
-    def _build() -> DataFrame:
-        corpus = _planted_corpus(_t(spark, sf_dir, "embeddings"))
-        pairs = embedding_near_duplicates(
-            corpus, "vec_id", "embedding", threshold=0.99,
-            method="lsh", n_planes=8, tables=4, dim=64, tag_partitions=4)
-        return pairs.select("id_a", "id_b",
-                            rnd("cosine", 4).alias("cosine"))
-
-    return warm_view(spark, sf_dir, "dedup_embedding_lsh", _build)
+    ~1 MB cached corpus (see operator docstring)."""
+    corpus = _planted_corpus(_t(spark, sf_dir, "embeddings"))
+    pairs = embedding_near_duplicates(
+        corpus, "vec_id", "embedding", threshold=0.99,
+        method="lsh", n_planes=8, tables=4, dim=64, tag_partitions=4)
+    return pairs.select("id_a", "id_b", rnd("cosine", 4).alias("cosine"))
 
 
 def _semantic_oracle(n_clusters: int, threshold: float, iters: int) -> str:

@@ -6,7 +6,6 @@ from .registry import (
     TESTDATA_TABLES,
     load_table,
     register_testdata,
-    warm_tables,
 )
 from .versioned import (
     CommitConflict,
@@ -25,7 +24,7 @@ from .versioned import (
 )
 
 __all__ = ["TESTDATA_TABLES", "load_table", "register_testdata",
-           "warm_tables", "write_version", "read_version",
+           "write_version", "read_version",
            "merge_version", "compact", "vacuum", "history",
            "latest_version", "diff_versions", "evolve_partitioning",
            "evolve_schema",

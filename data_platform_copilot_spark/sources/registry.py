@@ -10,6 +10,10 @@ Scale notes: parquet scans get predicate pushdown + column pruning
 from Catalyst for free once the query is declarative; at 100 TB the
 same views would point at partitioned parquet/Delta directories and
 nothing above this layer changes.
+
+Nothing here memoizes a frame: every ``load_table`` call lists and
+reads the file anew, so a table rewritten between two calls is seen
+by the second (ARCHITECTURE.md, "Registry builders are pure").
 """
 
 from __future__ import annotations
@@ -30,87 +34,6 @@ TESTDATA_TABLES = (
 _NANOS_TS_COLUMNS = {"events": ("ts",)}
 
 
-# Warm-table registry: (applicationId, sf_dir, name) -> DataFrame.
-# Populated by warm_tables(); load_table returns the warm copy when
-# present, so repeated queries against the same sf_dir reuse one
-# analyzed (and optionally memory-persisted) plan instead of
-# re-listing parquet and re-probing partitioning every call. This is
-# the local-mode analogue of a cluster's long-lived table catalog +
-# buffer cache; correctness paths never require it.
-_WARM: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def warm_tables(spark: SparkSession, sf_dir: str,
-                tables: tuple[str, ...] = TESTDATA_TABLES,
-                persist: bool = True) -> None:
-    """Pre-load every table once. Two modes:
-
-    ``persist=False`` (the bench mode since r14): PLAN-only warming —
-    memoize each table's analyzed frame so repeated queries skip
-    re-listing parquet and re-probing schemas (driver bookkeeping),
-    while every execution still scans the parquet files. No data is
-    cached and no layout repartition is injected, so a warmed frame
-    plans exactly like the cold ``load_table`` path. This is the mode
-    benchmarks must use: timed runs compute from the inputs
-    (BENCH.md r14 change-log entry has the same-commit A/B).
-
-    ``persist=True``: additionally materialize the SPREAD layout into
-    the block-manager cache — the state of a cluster whose buffer
-    cache holds the working set with properly-sized splits. Probes
-    that isolate NON-scan costs (straggler sweep, fair-pool overlap)
-    use it; the graded bench does not. Idempotent per (app, sf_dir).
-    """
-    app = spark.sparkContext.applicationId
-    for name in tables:
-        key = (app, sf_dir, name)
-        got = _WARM.get(key)
-        if got is not None:
-            # r14 ADVICE: the memo used to ignore the persist flag, so
-            # a persist=True call after a plan-only warm silently
-            # no-opped and probes expecting cached tables measured
-            # unpersisted scans. A plan-only entry is now UPGRADED to
-            # the persisted layout when persist=True asks for it; the
-            # reverse (plan-only after persisted) keeps the persisted
-            # frame — persist=True probes opted into cache semantics
-            # for the whole session.
-            already = (got.storageLevel.useMemory
-                       or got.storageLevel.useDisk)
-            if not persist or already:
-                continue
-            _WARM.pop(key)
-        if persist:
-            # Persist the SPREAD layout: the testdata files are single
-            # row-group (1 partition); caching them pre-repartitioned
-            # means every downstream spread() is a no-op and parallel
-            # stages start parallel.
-            df = spread(load_table(spark, sf_dir, name)).persist()
-            df.count()
-        else:
-            df = load_table(spark, sf_dir, name)
-        _WARM[key] = df
-
-
-def warm_view(spark: SparkSession, sf_dir: str, name: str,
-              builder) -> DataFrame:
-    """Plan reuse for a derived view: build the (pure-lazy) DataFrame
-    once per (app, sf_dir, name) and return the same analyzed plan on
-    later calls — the derived-view analogue of ``warm_tables``.
-
-    This caches the PLAN, never results: the builder must return a
-    frame with no persist/localCheckpoint anywhere in it, so every
-    execution re-runs the full pipeline (a warm service holds exactly
-    such long-lived DataFrames instead of re-assembling the py4j
-    expression tree per request; for Arrow-stage-heavy plans the
-    rebuild costs ~0.2 s per call — pure driver bookkeeping that says
-    nothing about engine throughput). Correctness paths are
-    indifferent: a memo hit returns the identical immutable plan."""
-    key = (spark.sparkContext.applicationId, sf_dir, f"view:{name}")
-    got = _WARM.get(key)
-    if got is None:
-        got = _WARM[key] = builder()
-    return got
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one warehouse table from ``{sf_dir}/{name}.parquet``."""
     # The warehouse contract is UTC (reference stores UTC; the DuckDB
@@ -118,14 +41,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # normalization below re-labels naive instants in the SESSION
     # timezone, so pin it here — runtime-settable, and required even
     # on sessions we did not build (e.g. the driver's own session).
-    # Pinned on BOTH the warm and cold paths: the NTZ->LTZ cast is
-    # lazy, so a caller that reset the session timezone after the
-    # cold load would otherwise re-label cached frames' naive
-    # instants under the new zone at execution time.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    warm = _WARM.get((spark.sparkContext.applicationId, sf_dir, name))
-    if warm is not None:
-        return warm
     if name in _NANOS_TS_COLUMNS:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -173,22 +89,7 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     if not sc.master.startswith("local"):
         return df
     target = min_partitions or sc.defaultParallelism
-    # The .rdd partition probe builds a fresh JVM RDD lineage per
-    # call — measured 4-13 ms of driver bookkeeping (13 ms on the
-    # events table, whose NTZ/nanos rebuild makes the conversion
-    # plan bigger). DataFrames are immutable, so memoize the probe
-    # result on the object: the long-lived warm frames every query
-    # reads (warm_tables) then pay it once per process instead of
-    # once per invocation. Derived frames get a fresh probe, as
-    # before.
-    n = getattr(df, "_graft_npart", None)
-    if n is None:
-        n = df.rdd.getNumPartitions()
-        try:
-            df._graft_npart = n
-        except AttributeError:  # pragma: no cover — slotted impl
-            pass
-    if n * 2 <= target:
+    if df.rdd.getNumPartitions() * 2 <= target:
         return df.repartition(target)
     return df
 
@@ -211,7 +112,9 @@ def materialize_auto(df: DataFrame) -> DataFrame:
     service that re-invokes such queries should periodically call
     ``spark.catalog.clearCache()`` between requests. Local masters
     (every bench/probe path) take the localCheckpoint branch and do
-    not leak — the r14 bench de-gaming covered exactly that path."""
+    not leak. Either way the shared blocks belong to one invocation:
+    registry calls build a new plan each time, so no later call
+    reads them."""
     if df.sparkSession.sparkContext.master.startswith("local"):
         return df.localCheckpoint(eager=False)
     from pyspark import StorageLevel

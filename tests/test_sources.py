@@ -36,23 +36,35 @@ def test_streaming_source_dtype_matches_batch(spark, sf_dir):
     assert dict(stream.dtypes)["ts"] == "timestamp"
 
 
-def test_warm_tables_persist_upgrades_plan_only_entry(spark, sf_dir):
-    # r14 ADVICE: the warm memo used to ignore the persist flag — a
-    # persist=True warm after a plan-only warm silently no-opped, so
-    # probes expecting cached tables measured unpersisted scans. A
-    # plan-only entry must now upgrade to the persisted layout.
-    from data_platform_copilot_spark.sources.registry import (
-        _WARM, warm_tables)
+def test_registry_requery_sees_rewritten_input(spark, tmp_path):
+    """A registry call after its input file was rewritten must answer
+    from the new file, never from a plan (or its shuffle output) built
+    on the old one."""
+    import shutil
+
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from data_platform_copilot_spark.queries import ORACLE, QUERIES
+    from tests.conftest import SF_DIR, TABLES, normalize_rows
+
+    for t in TABLES:
+        shutil.copyfile(f"{SF_DIR}/{t}.parquet", tmp_path / f"{t}.parquet")
+    name, sf = "flagship_revenue_by_nation", str(tmp_path)
+    before = QUERIES[name](spark, sf).toPandas()
+
+    orders = pq.read_table(tmp_path / "orders.parquet")
+    pq.write_table(orders.slice(0, orders.num_rows // 2),
+                   tmp_path / "orders.parquet")
+    after = QUERIES[name](spark, sf).toPandas()
+
+    con = duckdb.connect()
     try:
-        warm_tables(spark, sf_dir, tables=("region",), persist=False)
-        df = load_table(spark, sf_dir, "region")
-        assert not (df.storageLevel.useMemory or df.storageLevel.useDisk)
-        warm_tables(spark, sf_dir, tables=("region",), persist=True)
-        df2 = load_table(spark, sf_dir, "region")
-        assert df2.storageLevel.useMemory or df2.storageLevel.useDisk
+        for t in TABLES:
+            con.execute(f"CREATE VIEW {t} AS "
+                        f"SELECT * FROM '{tmp_path}/{t}.parquet'")
+        expected = con.execute(ORACLE[name]).fetchdf()
     finally:
-        # leave no cached state behind for other tests
-        app = spark.sparkContext.applicationId
-        got = _WARM.pop((app, sf_dir, "region"), None)
-        if got is not None:
-            got.unpersist()
+        con.close()
+    assert normalize_rows(after) == normalize_rows(expected)
+    assert normalize_rows(after) != normalize_rows(before)

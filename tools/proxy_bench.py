@@ -51,15 +51,13 @@ def main() -> None:
     from bench import BENCH_QUERIES
     from data_platform_copilot_spark.queries import ORACLE, QUERIES
     from data_platform_copilot_spark.session import get_spark
-    from data_platform_copilot_spark.sources import warm_tables
 
     names = [n for n in BENCH_QUERIES if n in QUERIES and n in ORACLE]
     duck = duckdb_timings(sf_dir, names)
 
     spark = get_spark("proxy-bench")
-    # plan-only warming (r14): both engines scan parquet per run —
-    # DuckDB through its views, Spark through the memoized lazy frames
-    warm_tables(spark, sf_dir, persist=False)
+    # both engines scan parquet per run — DuckDB through its views,
+    # Spark through a freshly built plan per call
     QUERIES[names[0]](spark, sf_dir).collect()
     (spark.range(256).repartition(8)
      .mapInPandas(lambda it: it, "id long")

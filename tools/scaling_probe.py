@@ -88,13 +88,11 @@ def main() -> None:
     out = f"/tmp/spark_graft_sf_x{k}"
     from data_platform_copilot_spark.queries import QUERIES
     from data_platform_copilot_spark.session import get_spark
-    from data_platform_copilot_spark.sources import warm_tables
     spark = get_spark("scaling-probe")
     if not Path(f"{out}/lineitem.parquet").exists():
         build(spark, k, out)
     results = {}
     for sf_dir in (BASE, out):
-        warm_tables(spark, sf_dir)
         QUERIES["flagship_revenue_by_nation"](spark, sf_dir).collect()
         t = {}
         for n in names:
